@@ -722,37 +722,28 @@ object SparkEntry {
         // are independent, so a sequential map serialized ~26 parse +
         // inference steps that overlap cleanly (measured as the first
         // ~4 s of tiny jobs in the `Probe jobs panel_all` profile).
-        // Future.sequence preserves list order, so downstream ordering
+        // ForkJoin returns results in list order, so downstream ordering
         // (and the oracle) is untouched.
-        val datasets = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            Runner.ingestParallelismFor(s.sparkContext.defaultParallelism))
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          try Await.result(Future.sequence(Registry.allConfigs.map { cfg =>
-            Future {
-              val path = s"$fx/${files(cfg.name)}"
-              cfg.kind match {
-                case Registry.Fred =>
-                  val (canon, snake) = FredSource.canonicalize(
-                    FredSource.process(
-                      FredSource.readObservations(s, path), cfg), cfg)
-                  (cfg.tableName, canon, Seq(snake))
-                case Registry.NyuStern =>
-                  (cfg.tableName, NyuSource.canonicalize(NyuSource.process(
-                    NyuSource.readSheet(s, path))), Registry.nyuValueFields)
-                case _ =>
-                  val grid = GridSource.readGrid(s, path, cfg.dataLocation)
-                  val (canon, snake) = GridSource.canonicalize(
-                    GridSource.processMonthly(grid, cfg), cfg)
-                  (cfg.tableName, canon, Seq(snake))
-              }
+        val datasets = graft.ForkJoin.all(s,
+            Runner.ingestParallelismFor(s.sparkContext.defaultParallelism))(
+          Registry.allConfigs.map { cfg => () =>
+            val path = s"$fx/${files(cfg.name)}"
+            cfg.kind match {
+              case Registry.Fred =>
+                val (canon, snake) = FredSource.canonicalize(
+                  FredSource.process(
+                    FredSource.readObservations(s, path), cfg), cfg)
+                (cfg.tableName, canon, Seq(snake))
+              case Registry.NyuStern =>
+                (cfg.tableName, NyuSource.canonicalize(NyuSource.process(
+                  NyuSource.readSheet(s, path))), Registry.nyuValueFields)
+              case _ =>
+                val grid = GridSource.readGrid(s, path, cfg.dataLocation)
+                val (canon, snake) = GridSource.canonicalize(
+                  GridSource.processMonthly(grid, cfg), cfg)
+                (cfg.tableName, canon, Seq(snake))
             }
-          }), Duration.Inf)
-          finally pool.shutdown()
-        }
+          })
         // fan-out derives from the session (Runner.defaultIngestParallelism:
         // defaultParallelism/4 = 8 on local[32], the round-10 measured
         // optimum) instead of a hard-coded literal
@@ -3213,11 +3204,7 @@ object SparkEntry {
       // driver calls them sequentially; the fit's driver-paced seeding
       // picks back-fill the cores the g3 jobs leave idle). Job labels
       // make the stages attributable in `Probe jobs` / event logs.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val g3F = Future(labeled(s, "funnelv2: bloom + g3 spine") {
+      val (g3, cents) = graft.ForkJoin.both(s)(labeled(s, "funnelv2: bloom + g3 spine") {
         val bitmap = Dedup.bloomBuildAuto(
           docs.filter(col("doc_id") % 50 === 0), "text",
           shingleWords = 3, k = 3)
@@ -3256,19 +3243,16 @@ object SparkEntry {
         spine.join(repOk, "doc_id").join(bloomOk, "doc_id")
           .join(ndDrop, Seq("doc_id"), "left_anti")
           .localCheckpoint()
-      })
+      },
       // stage 6 quantizer: SemDeDup through the trained k=8 coarse
       // quantizer. Drop-set semantics, NOT keep-set: a doc with no
       // embedding row cannot be judged semantically and passes through
       // (only a proven within-cluster near-dup drops) — the sf0.1
       // testdata exercises exactly this, covering only 2 of 5 docs with
       // embeddings.
-      val centsF = Future(labeled(s, "funnelv2: kmeans fit") {
+      labeled(s, "funnelv2: kmeans fit") {
         KMeans.fit(emb, "vec_id", "embedding", k = 8, iters = 2)
       })
-      val (g3, cents) =
-        try (Await.result(g3F, Duration.Inf), Await.result(centsF, Duration.Inf))
-        finally pool.shutdown()
       val g3emb = emb.join(g3.select(col("doc_id").as("vec_id")), "vec_id")
       val semKeep = labeled(s, "funnelv2: semdedup") {
         KMeans.semDedup(g3emb, "vec_id", "embedding", cents,

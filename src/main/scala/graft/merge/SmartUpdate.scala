@@ -144,50 +144,45 @@ object SmartUpdate {
   /** Result counts of a merge, mirroring the reference's return value. */
   case class MergeCounts(newRows: Long, updated: Long, revisions: Long)
 
-  /** Full merge: classify + build the post-merge table + revision log.
-    * Returns (mergedTable, revisions, counts). The merged table is
-    * (existing rows not superseded) ∪ (new) ∪ (updated) — unchanged rows
-    * keep their EXISTING values/rows (never rewritten semantically).
+  /** One diff's outputs, all read off one classify checkpoint:
+    * `changedKeys` are the new and updated keys, `fresh` the incoming rows
+    * carrying them (the only rows a write takes from the batch), and
+    * `revisions` the CDC rows. */
+  final case class Diff(fresh: DataFrame, changedKeys: DataFrame,
+                        revisions: DataFrame, counts: MergeCounts)
+
+  /** The diff step every merge path shares: last-wins dedupe, classify
+    * against an existing side the CALLER has already scoped (key range,
+    * touched partitions — rows outside it are existing_only by
+    * construction), then one checkpoint and one count aggregate.
     *
-    * One cached classify pass feeds the keys, the revision log, and all
-    * three counts (a single aggregate action); the existing side of the
-    * classify join is range-pruned by the incoming batch. */
-  def merge(incoming0: DataFrame, existing: DataFrame, keyCol: String,
-            valueFields: Seq[String], dataset: String,
-            revisionTime: java.sql.Timestamp)
-      : (DataFrame, DataFrame, MergeCounts) = {
+    * localCheckpoint, not cache: the classified rows back an RDD with NO
+    * file source in the plan, so (a) the returned keys and revisions stay
+    * correct after the caller overwrites the very files `existing` read —
+    * a cached plan would be refreshed/recomputed from the post-merge table
+    * (empty CDC) or chase deleted pre-swap files on eviction — and (b)
+    * nothing is registered with the CacheManager, so per-dataset merges
+    * don't accumulate cache entries the caller can't release (the RDD is
+    * GC'd with the frame).
+    *
+    * PARITY NOTE: an updated key takes the incoming row VERBATIM (`fresh`)
+    * — including fields whose incoming value is null/NaN (which
+    * changedField deliberately skips, so they are neither counted nor
+    * logged as revisions). The reference behaves identically: it upserts
+    * the FULL incoming entity for any changed record
+    * (azure_data_tracker.py:75-84 copies every field of the row into the
+    * entity; batch_upsert merges every present property), so an incoming
+    * NaN rides along whenever any OTHER field changed. Callers wanting
+    * keep-existing-on-missing semantics should coalesce the incoming
+    * frame against the store first. */
+  def diff(incoming0: DataFrame, existing: DataFrame, keyCol: String,
+           valueFields: Seq[String], dataset: String,
+           revisionTime: java.sql.Timestamp): Diff = {
     val incoming = dedupeLastWins(incoming0, keyCol)
-    val existingPruned = pruneToKeyRange(existing, incoming, keyCol)
-    // localCheckpoint, not cache: the classified rows back an RDD with NO
-    // file source in the plan, so (a) the returned `revs` stays correct
-    // after the caller overwrites the very files `existing` read — a
-    // cached plan would be refreshed/recomputed from the post-merge table
-    // (empty CDC) or chase deleted pre-swap files on eviction — and (b)
-    // nothing is registered with the CacheManager, so per-dataset merges
-    // don't accumulate cache entries the caller can't release (the RDD is
-    // GC'd with the frame). The merge is already eager (counts aggregate
-    // below), so this adds no extra action.
-    val cls = classify(incoming, existingPruned, keyCol, valueFields)
+    val cls = classify(incoming, existing, keyCol, valueFields)
       .localCheckpoint(true)
-    val newOrUpdatedKeys = cls.filter(col("status").isin("new", "updated"))
+    val changedKeys = cls.filter(col("status").isin("new", "updated"))
       .select(col(keyCol))
-    // unchanged + existing_only + out-of-range rows stay as stored originals
-    val kept = existing.join(newOrUpdatedKeys, Seq(keyCol), "left_anti")
-    // PARITY NOTE: an updated key takes the incoming row VERBATIM —
-    // including fields whose incoming value is null/NaN (which
-    // changedField deliberately skips, so they are neither counted nor
-    // logged as revisions). The reference behaves identically: it upserts
-    // the FULL incoming entity for any changed record
-    // (azure_data_tracker.py:75-84 copies every field of the row into the
-    // entity; batch_upsert merges every present property), so an incoming
-    // NaN rides along whenever any OTHER field changed. Callers wanting
-    // keep-existing-on-missing semantics should coalesce the incoming
-    // frame against the store first; the engine preserves the reference's
-    // contract as-is.
-    val fresh = incoming.join(newOrUpdatedKeys, Seq(keyCol), "left_semi")
-    val merged = kept.select(col(keyCol) +: valueFields.map(col): _*)
-      .unionByName(fresh.select(col(keyCol) +: valueFields.map(col): _*))
-    val revs = revisionsFromClassified(cls, keyCol, valueFields, dataset, revisionTime)
     // one action for all three counts: revisions = total changed flags
     val changedSum = valueFields.map(f =>
       sum(col(s"${f}_changed").cast("long"))).reduceOption(_ + _)
@@ -197,7 +192,25 @@ object SmartUpdate {
       sum(when(col("status") === "updated", 1L).otherwise(0L)).as("u"),
       changedSum.as("r")).head()
     def g(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-    val counts = MergeCounts(g(0), g(1), g(2))
-    (merged, revs, counts)
+    Diff(incoming.join(changedKeys, Seq(keyCol), "left_semi"), changedKeys,
+      revisionsFromClassified(cls, keyCol, valueFields, dataset, revisionTime),
+      MergeCounts(g(0), g(1), g(2)))
+  }
+
+  /** Full merge: the diff against `existing` pruned to the batch's key
+    * range, plus the post-merge table. Returns (mergedTable, revisions,
+    * counts). The merged table is (existing rows not superseded) ∪ (new)
+    * ∪ (updated) — unchanged rows keep their EXISTING values/rows (never
+    * rewritten semantically). */
+  def merge(incoming: DataFrame, existing: DataFrame, keyCol: String,
+            valueFields: Seq[String], dataset: String,
+            revisionTime: java.sql.Timestamp)
+      : (DataFrame, DataFrame, MergeCounts) = {
+    val d = diff(incoming, pruneToKeyRange(existing, incoming, keyCol),
+      keyCol, valueFields, dataset, revisionTime)
+    val cols = col(keyCol) +: valueFields.map(col)
+    val merged = existing.join(d.changedKeys, Seq(keyCol), "left_anti")
+      .select(cols: _*).unionByName(d.fresh.select(cols: _*))
+    (merged, d.revisions, d.counts)
   }
 }

@@ -1074,7 +1074,17 @@ object Dedup {
     * equi-join (hamming 0), and distinct-print candidates come from the
     * pigeonhole join over the two rep frames. Within-batch duplication
     * composes with the batch operator, the established
-    * dedupAgainstIndex convention. */
+    * dedupAgainstIndex convention.
+    *
+    * `checkpointIndex` contract: `index` feeds three plan branches
+    * (identical-print join, rep groupBy, membership fan-out). With
+    * `checkpointIndex = false` (the default) each branch evaluates it on
+    * its own, so the index MUST be a deterministic or persisted scan (a
+    * column-pruned read of the print store); an index derived in-plan
+    * from payloads or from any nondeterministic source would be
+    * recomputed per branch and could yield an internally inconsistent
+    * pair set. Such a caller passes `checkpointIndex = true`, which
+    * materializes the index once for all three branches. */
   def quarterNearDupAgainstIndex(batch: DataFrame, index: DataFrame,
                                  maxHamming: Int = 3,
                                  approxRecall: Boolean = false,

@@ -314,10 +314,10 @@ object KMeans {
     // bit-identical (least chains associate exactly for non-NaN
     // doubles) — with the frame lazily localCheckpointed per round so
     // the pick's TakeOrdered materializes it in the SAME job (no extra
-    // job per round; constant-size plan per round). Residency: the
-    // checkpoint chain holds ≤ k ≤ LargeKSeedThreshold copies of the
-    // (id, v, vn2, d) frame until driver GC — bounded by the small-k
-    // contract of this path (large k dispatches to seedLargeK).
+    // job per round; constant-size plan per round). Residency: each
+    // round releases the checkpoint its pick superseded, so at most two
+    // copies of the (id, v, vn2, d) frame are resident (the one a pick
+    // reads and the one it materializes), and none after seeding.
     // CROSSOVER: below RunningMinSeedThreshold the checkpoint
     // round-trip costs more than the few-literal chained-least plans it
     // replaces (measured: k=8 coarse fits −5-8%, k=16 subspace fits
@@ -335,21 +335,45 @@ object KMeans {
           .limit(1).collect().head.getSeq[Double](0)
       }
     } else if (k > 1) {
+      def pick(f: DataFrame): Seq[Double] = f
+        .select(transform(col("__v"), x => round(x, 6)).as("__c"),
+          col("__d"), col("__id"))
+        .orderBy(col("__d").desc, col("__id"))
+        .limit(1).collect().head.getSeq[Double](0)
       var cur = v.withColumn("__d", distTo(first)).localCheckpoint(false)
+      seeds :+= pick(cur)
       while (seeds.size < k) {
-        val next = cur
-          .select(transform(col("__v"), x => round(x, 6)).as("__c"),
-            col("__d"), col("__id"))
-          .orderBy(col("__d").desc, col("__id"))
-          .limit(1).collect().head.getSeq[Double](0)
-        seeds :+= next
-        if (seeds.size < k)
-          cur = cur.withColumn("__d", least(col("__d"), distTo(next)))
-            .localCheckpoint(false)
+        val next = cur.withColumn("__d", least(col("__d"), distTo(seeds.last)))
+          .localCheckpoint(false)
+        seeds :+= pick(next)
+        // the pick materialized `next`, so `cur` is superseded
+        releaseCheckpoint(cur)
+        cur = next
       }
+      releaseCheckpoint(cur)
     }
     seeds.zipWithIndex.map { case (c, i) => Centroid(i, c, 0L) }.toSeq
   }
+
+  /** Drop the blocks behind a localCheckpointed frame once nothing reads
+    * it any more (Dataset.unpersist only reaches CacheManager entries).
+    * RDD.unpersist logs a WARN for every local checkpoint it drops; here
+    * dropping it is the intent, so that one logger is held at ERROR for
+    * the call (under a lock, so concurrent fits restore the right level)
+    * instead of adding a WARN line per seeding round. */
+  private def releaseCheckpoint(f: DataFrame): Unit =
+    f.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.logging.log4j.LogManager.getLogger(r.rdd.getClass) match {
+          case l: org.apache.logging.log4j.core.Logger => ReleaseLock.synchronized {
+            val prev = l.getLevel
+            l.setLevel(org.apache.logging.log4j.Level.ERROR)
+            try r.rdd.unpersist(blocking = false) finally l.setLevel(prev)
+          }
+          case _ => r.rdd.unpersist(blocking = false)
+        }
+    }
+  private object ReleaseLock
 
   /** Seeding-scan crossover: at or below this k the farthest-first
     * picks inline the chosen seeds as a chained least() (small plans,
@@ -661,17 +685,11 @@ object KMeans {
       val dim = mm.getInt(0)
       require(dim % m == 0, s"pqFit: dim $dim not divisible into $m subspaces")
       val sub = dim / m
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        Await.result(Future.sequence((0 until m).map { s =>
-          Future(fit(base.select(col(idCol),
-              slice(col(vecCol), s * sub + 1, sub).as("__sub")),
-            idCol, "__sub", k, iters))
-        }), Duration.Inf)
-      } finally { pool.shutdown(); () }
+      graft.ForkJoin.all(df.sparkSession, m)((0 until m).map { s => () =>
+        fit(base.select(col(idCol),
+            slice(col(vecCol), s * sub + 1, sub).as("__sub")),
+          idCol, "__sub", k, iters)
+      })
     } finally { base.unpersist(); () }
   }
 

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.config.Registry
 import graft.merge.SmartUpdate
 import graft.store.{SinkTypes, TableStore}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -14,6 +14,13 @@ import java.sql.Timestamp
   * 24h should_update gate (azure_connector.py:598-617; get/set :552-596).
   * Reference ordering quirk preserved: data is processed BEFORE the gate is
   * consulted — the gate only guards the WRITE (main_azure.py:84-116).
+  *
+  * Every entry point (runDataset, runDatasetPartitioned, runAllParallel,
+  * runFetched, and StreamIngest's micro-batches) is a thin call into the
+  * same two steps: one per-dataset merge (empty check, gate, declared-type
+  * policy, SmartUpdate.diff, write) and one commit (one revision-log
+  * append, one metadata write). The entry points differ only in the
+  * layout they give a NEW table; an existing table keeps its own layout.
   *
   * The wall clock is injected (`now`), never read inside a plan, so runs
   * are deterministic and harness-checkable (SURVEY.md §7.5 risk 3).
@@ -56,19 +63,10 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     m
   }
 
-  def getLastRun(dataset: String): Option[Timestamp] = metadata.get(dataset)
-
-  def setLastRun(dataset: String, ts: Timestamp): Unit = {
-    val m = metadata + (dataset -> ts)
-    metadataCache = Some(m)
-    store.overwrite(Registry.MetadataTable,
-      m.toSeq.toDF("dataset", "last_run"), maxFiles = 1)
-  }
-
   /** should_update: true iff never run or >= `hours` since last run
     * (azure_connector.py:598-617). */
   def shouldUpdate(dataset: String, hours: Int = 24): Boolean =
-    getLastRun(dataset) match {
+    metadata.get(dataset) match {
       case None => true
       case Some(last) =>
         (now().getTime - last.getTime) >= hours * 3600L * 1000L
@@ -78,43 +76,85 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
 
   import Runner.DatasetResult
 
-  /** Run one dataset: canonical long frame in, merge + revisions + metadata
-    * out. `canonical` must be (date: 'YYYY-MM-DD' string, <value fields>). */
-  /** Core merge for one dataset: classify + table write, returning the
-    * revision frame for the caller to persist (kept separate so parallel
-    * runs can serialize the shared revisions/metadata writes). */
-  private def mergeCore(tableName: String, canonical0: DataFrame,
-                        valueFields: Seq[String], gateHours: Int)
-      : (DatasetResult, Option[DataFrame]) = {
-    // the merge fires several actions against the incoming frame (classify
-    // aggregate, key joins, the final write) — cache it so the source
-    // pipeline (file read + reshape + sort) runs once, not per action
-    val canonical = canonical0.cache()
+  private val Key = "date"
+  private val Year = "__year"
+  private def yearOf(c: Column) = substring(c, 1, 4).cast("int")
+
+  /** The one per-dataset merge. `canonical0` is (date: 'YYYY-MM-DD'
+    * string, <value fields>). The write scope follows the table's layout,
+    * read off the schema the merge loads anyway: a year-partitioned table
+    * (a `__year` column) replaces only the year partitions holding new or
+    * updated keys; a flat table is rewritten whole by atomic swap.
+    * `partitionedIfNew` picks the layout of a table this merge creates.
+    * Neither layout writes when no key is new or updated. Returns the
+    * revision frame for [[commit]] to persist. */
+  private def merge(table: String, canonical0: DataFrame,
+                    valueFields: Seq[String], gateHours: Int,
+                    partitionedIfNew: Boolean): (DatasetResult, Option[DataFrame]) = {
+    // deduped once, before the cache, so the classify and the write see
+    // the same surviving row per key; cached so the source pipeline (file
+    // read + reshape + sort) runs once, not per action
+    val canonical = SmartUpdate.dedupeLastWins(canonical0, Key).cache()
     try {
-      if (canonical.isEmpty)
-        return (DatasetResult(tableName, "no_data", 0, 0, 0), None)
-      if (!shouldUpdate(tableName, gateHours))
-        return (DatasetResult(tableName, "skipped", 0, 0, 0), None)
+      // one aggregate answers the empty check and scopes the existing side
+      val span = canonical.agg(count(lit(1)), min(col(Key)), max(col(Key)),
+        collect_set(substring(col(Key), 1, 4))).head()
+      if (span.getLong(0) == 0)
+        return (DatasetResult(table, "no_data", 0, 0, 0), None)
+      if (!shouldUpdate(table, gateHours))
+        return (DatasetResult(table, "skipped", 0, 0, 0), None)
       val ts = now()
+      val stored = if (store.exists(table)) Some(store.read(table)) else None
+      val partitioned = stored.fold(partitionedIfNew)(_.columns.contains(Year))
+      val incoming =
+        if (partitioned) canonical.withColumn(Year, yearOf(col(Key))) else canonical
       // reads normalize declared decimals to the engine's double surface;
       // the write casts back to the declared at-rest types — but ONLY for
       // tables created under the policy (legacy double tables keep their
-      // layout), and incoming values are snapped to the declared scale
-      // first so sink rounding can never churn the tolerance compare
-      val isNew = !store.exists(tableName)
-      val pol = SinkTypes.mergePolicy(
-        store.readOrEmpty(tableName, canonical), tableName, isNew, canonical)
-      val (merged, revs, counts) = SmartUpdate.merge(
-        pol.incoming, pol.existing, "date", valueFields, tableName, ts)
-      store.overwrite(tableName, pol.writeCast(merged),
-        maxFiles = 1)
-      // revs is a filter over the merge's checkpointed classify (an
-      // RDD-backed plan): safe to hand out lazily past the overwrite and
-      // the canonical unpersist — no cache or extra action needed
-      val revsOut = if (counts.revisions > 0) Some(revs) else None
-      (DatasetResult(tableName, "success", counts.newRows, counts.updated,
-        counts.revisions), revsOut)
+      // layout: a partition-scoped write must never mix physical types),
+      // and incoming values are snapped to the declared scale first so
+      // sink rounding can never churn the tolerance compare
+      val pol = SinkTypes.mergePolicy(stored.getOrElse(incoming.limit(0)),
+        table, stored.isEmpty, incoming)
+      // the range predicate reaches the parquet row-group stats; the year
+      // predicate prunes directories, so untouched years are never read
+      val inRange = col(Key).between(lit(span.get(1)), lit(span.get(2)))
+      val scope = if (!partitioned) inRange
+        else inRange && col(Year).isin(span.getSeq[String](3).map(_.toInt): _*)
+      val d = SmartUpdate.diff(pol.incoming, pol.existing.filter(scope), Key,
+        valueFields, table, ts)
+      if (d.counts.newRows > 0 || d.counts.updated > 0) {
+        val cols = ((Key +: valueFields) ++ (if (partitioned) Seq(Year) else Nil)).map(col)
+        val kept = if (!partitioned) pol.existing else {
+          val years = d.changedKeys.select(yearOf(col(Key))).distinct()
+            .collect().map(_.getInt(0)).toSeq
+          pol.existing.filter(col(Year).isin(years: _*))
+        }
+        val out = pol.writeCast(kept.join(d.changedKeys, Seq(Key), "left_anti")
+          .select(cols: _*).unionByName(d.fresh.select(cols: _*)))
+        if (partitioned) store.overwritePartitions(table, out, Seq(Year))
+        else store.overwrite(table, out, maxFiles = 1)
+      }
+      (DatasetResult(table, "success", d.counts.newRows, d.counts.updated,
+        d.counts.revisions), if (d.counts.revisions > 0) Some(d.revisions) else None)
     } finally canonical.unpersist()
+  }
+
+  /** The one commit: every merge's revisions in one append to the shared
+    * log, and every success's last_run in one metadata write. */
+  private def commit(outcomes: Seq[(DatasetResult, Option[DataFrame])]): Seq[DatasetResult] = {
+    val revs = outcomes.flatMap(_._2)
+    if (revs.nonEmpty)
+      store.append(Registry.RevisionsTable, revs.reduce(_.unionByName(_)), maxFiles = 1)
+    val successes = outcomes.collect { case (r, _) if r.status == "success" => r.dataset }
+    if (successes.nonEmpty) {
+      val ts = now()
+      val m = metadata ++ successes.map(_ -> ts)
+      metadataCache = Some(m)
+      store.overwrite(Registry.MetadataTable,
+        m.toSeq.toDF("dataset", "last_run"), maxFiles = 1)
+    }
+    outcomes.map(_._1)
   }
 
   /** The per-dataset fetch-failure contract (main_azure.py:136-152 +
@@ -139,13 +179,11 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
         }
     }
 
+  /** Run one dataset; a new table is created flat (one file). */
   def runDataset(tableName: String, canonical0: DataFrame,
-                 valueFields: Seq[String], gateHours: Int = 24): DatasetResult = {
-    val (result, revs) = mergeCore(tableName, canonical0, valueFields, gateHours)
-    revs.foreach(r => store.append(Registry.RevisionsTable, r, maxFiles = 1))
-    if (result.status == "success") setLastRun(tableName, now())
-    result
-  }
+                 valueFields: Seq[String], gateHours: Int = 24): DatasetResult =
+    commit(Seq(merge(tableName, canonical0, valueFields, gateHours,
+      partitionedIfNew = false))).head
 
   /** Ingest fan-out sized to the session instead of a hard-coded literal.
     * Each dataset's merge is driver-side parse plus a handful of small
@@ -189,126 +227,28 @@ final class Runner(spark: SparkSession, store: TableStore, now: () => Timestamp)
     * Spark jobs (the scheduler interleaves them across executor threads).
     * Per-dataset table writes target distinct directories and are safe
     * concurrently; the SHARED writes — datarevisions append, metadata —
-    * are collected and applied once, serially, at the end. The pool is
+    * are collected and committed once, serially, at the end. The pool is
     * never wider than the dataset list; `parallelism` defaults to the
-    * session-derived fan-out above. */
+    * session-derived fan-out above. New tables are created flat. */
   def runAllParallel(datasets: Seq[(String, DataFrame, Seq[String])],
                      gateHours: Int = 24,
-                     parallelism: Int = defaultIngestParallelism): Seq[DatasetResult] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, math.max(1, datasets.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = datasets.map { case (table, df, vf) =>
-        Future(mergeCore(table, df, vf, gateHours))
-      }
-      val outcomes = Await.result(Future.sequence(futures), Duration.Inf)
-      val allRevs = outcomes.flatMap(_._2)
-      if (allRevs.nonEmpty)
-        store.append(Registry.RevisionsTable,
-          allRevs.reduce(_.unionByName(_)), maxFiles = 1)
-      val ts = now()
-      // ONE metadata write for the whole run: per-dataset setLastRun would
-      // overwrite-and-swap the (tiny) table once per success — 26 write
-      // jobs where one carries the same information
-      val successes = outcomes.collect {
-        case (r, _) if r.status == "success" => r.dataset
-      }
-      if (successes.nonEmpty) {
-        val m = metadata ++ successes.map(_ -> ts)
-        metadataCache = Some(m)
-        store.overwrite(Registry.MetadataTable,
-          m.toSeq.toDF("dataset", "last_run"), maxFiles = 1)
-      }
-      outcomes.map(_._1)
-    } finally pool.shutdown()
-  }
+                     parallelism: Int = defaultIngestParallelism): Seq[DatasetResult] =
+    commit(graft.ForkJoin.all(spark, parallelism)(datasets.map { case (table, df, vf) =>
+      () => merge(table, df, vf, gateHours, partitionedIfNew = false)
+    }))
 
-  /** Scale path: the same merge with a YEAR-partitioned table layout and
-    * partition-scoped writes. The existing side is read with a partition
+  /** Scale path: the same merge, creating a new table YEAR-partitioned
+    * (`table/__year=YYYY/`). The existing side is read with a partition
     * filter on the years the incoming batch touches (directory pruning —
-    * untouched years are never read), and the write replaces only those
-    * year partitions (dynamic partition overwrite — untouched years are
-    * never written). Fixes the full-rewrite scale limit for good: cost per
-    * merge is O(touched partitions), not O(table).
-    *
-    * Semantics are identical to runDataset (same classify/revisions); rows
-    * in untouched years are existing_only by construction. */
+    * untouched years are never read), and the write replaces only the
+    * years holding new or updated keys (dynamic partition overwrite —
+    * untouched years are never written): cost per merge is
+    * O(touched partitions), not O(table). */
   def runDatasetPartitioned(tableName: String, canonical0: DataFrame,
                             valueFields: Seq[String],
-                            gateHours: Int = 24): DatasetResult = {
-    val canonical = SmartUpdate.dedupeLastWins(canonical0, "date")
-      .withColumn("__year", substring(col("date"), 1, 4).cast("int"))
-      .cache()
-    try {
-      if (canonical.isEmpty)
-        return DatasetResult(tableName, "no_data", 0, 0, 0)
-      if (!shouldUpdate(tableName, gateHours))
-        return DatasetResult(tableName, "skipped", 0, 0, 0)
-      val ts = now()
-      val years = canonical.select("__year").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // same declared-type policy as mergeCore: legacy double tables keep
-      // their layout (a partition-scoped write must NEVER mix double and
-      // decimal physical types across one table's partitions — the table
-      // would become unreadable); declared tables snap incoming values to
-      // the declared scale before classify so rounding can't churn
-      val isNew = !store.exists(tableName)
-      val pol = SinkTypes.mergePolicy(
-        if (!isNew)
-          store.read(tableName).filter(col("__year").isin(years: _*))
-        else canonical.limit(0),
-        tableName, isNew, canonical)
-      val existingTouched = pol.existing
-      val canonV = pol.incoming
-      // localCheckpoint, not cache (same reasoning as SmartUpdate.merge):
-      // the classify result must survive the partition overwrite below —
-      // a cached plan still references the table files and gets refreshed
-      // from the POST-merge data (CacheManager.recacheByPath), which would
-      // empty the CDC log; an RDD-backed checkpoint has no file source.
-      val cls = SmartUpdate.classify(canonV.drop("__year"),
-        existingTouched.drop("__year"), "date", valueFields)
-        .localCheckpoint(true)
-      val changedSum = valueFields.map(f =>
-        sum(col(s"${f}_changed").cast("long"))).reduce(_ + _)
-      val cRow = cls.agg(
-        sum(when(col("status") === "new", 1L).otherwise(0L)),
-        sum(when(col("status") === "updated", 1L).otherwise(0L)),
-        changedSum).head()
-      def g(i: Int) = if (cRow.isNullAt(i)) 0L else cRow.getLong(i)
-      val counts = SmartUpdate.MergeCounts(g(0), g(1), g(2))
-      if (counts.newRows > 0 || counts.updated > 0) {
-        // partitions to rewrite = years that actually gained or changed a
-        // row; a full re-download with nothing new writes NOTHING (the
-        // reference's daily no-op run costs a classify, not a rewrite).
-        // A cheap filter over the checkpointed cls — reused thrice (years
-        // collect + two key joins) without needing its own cache entry.
-        val newOrUpdatedKeys = cls
-          .filter(col("status").isin("new", "updated")).select(col("date"))
-          .withColumn("__year", substring(col("date"), 1, 4).cast("int"))
-        val changedYears = newOrUpdatedKeys.select("__year").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val keptChanged = existingTouched
-          .filter(col("__year").isin(changedYears: _*))
-          .join(newOrUpdatedKeys.select("date"), Seq("date"), "left_anti")
-        val fresh = canonV
-          .join(newOrUpdatedKeys.select("date"), Seq("date"), "left_semi")
-        val cols = (Seq("date") ++ valueFields ++ Seq("__year")).map(col)
-        val out = keptChanged.select(cols: _*).unionByName(fresh.select(cols: _*))
-        store.overwritePartitions(tableName,
-          pol.writeCast(out), Seq("__year"))
-      }
-      if (counts.revisions > 0)
-        store.append(Registry.RevisionsTable,
-          SmartUpdate.revisionsFromClassified(
-            cls, "date", valueFields, tableName, ts), maxFiles = 1)
-      setLastRun(tableName, ts)
-      DatasetResult(tableName, "success", counts.newRows, counts.updated,
-        counts.revisions)
-    } finally canonical.unpersist()
-  }
+                            gateHours: Int = 24): DatasetResult =
+    commit(Seq(merge(tableName, canonical0, valueFields, gateHours,
+      partitionedIfNew = true))).head
 
   /** Fold per-dataset results into the run summary (main_azure.py:267-309)
     * and persist it (S11 — a table here; JSON via df.write.json if a blob

@@ -129,10 +129,10 @@ object SinkTypes {
     true
   }
 
-  /** The one merge-time policy bundle, shared by every merge path
-    * (Runner.mergeCore, Runner.runDatasetPartitioned,
-    * StreamIngest.ingest) so batch and streaming can never diverge on
-    * at-rest schema: decide whether this table carries declared types,
+  /** The one merge-time policy bundle, applied by the one merge path
+    * (Runner's per-dataset merge, behind every batch and streaming ingest
+    * entry point) so batch and streaming can never diverge on at-rest
+    * schema: decide whether this table carries declared types,
     * normalize the existing side to the engine's double surface, and snap
     * the incoming batch to the declared scale when the contract applies. */
   final case class MergePolicy(tableName: String, declared: Boolean,

@@ -993,6 +993,20 @@ class DedupSimilaritySpec extends SparkSuite {
     assert(degraded.map(_.nMembers).sum == 3)
   }
 
+  test("kmeans: running-min seeding releases its superseded checkpoints") {
+    import graft.ops.KMeans
+    val k = 12
+    assert(k > KMeans.RunningMinSeedThreshold && k <= KMeans.LargeKSeedThreshold)
+    val rows = (0 until 60).map { i =>
+      i.toLong -> Array((i % 13).toFloat, (i / 13).toFloat, (i * 7 % 5).toFloat)
+    }.toDF("id", "vec")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(KMeans.fit(rows, "id", "vec", k = k, iters = 1).nonEmpty)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, s"seeding left ${added.size} checkpoints resident")
+  }
+
   test("bloom decontamination: no false negatives; superset of exact flags") {
     import graft.ops.Dedup
     val bench = Seq(1L -> "the quick brown fox jumps over the lazy dog")

@@ -114,6 +114,117 @@ class RunnerSpec extends SparkSuite {
     assert(partFiles(2015) == files2015 && partFiles(2020) == files2020Before)
   }
 
+  test("a whole-table merge into a year-partitioned table keeps its layout") {
+    val (store, runner, _) = newEnv()
+    val (canon, snake) = canonical()
+    assert(runner.runDatasetPartitioned(cfg.tableName, canon, Seq(snake))
+      .newRows == 119)
+    // runDataset on the partitioned table: the existing layout decides
+    // the write scope, so only __year=2015 is replaced — never a flat
+    // rewrite that drops __year
+    val revised = canon.withColumn(snake,
+      when(col("date") === "2015-07-01", col(snake) + 100).otherwise(col(snake)))
+    val r2 = runner.runDataset(cfg.tableName, revised, Seq(snake), gateHours = 0)
+    assert(r2.newRows == 0 && r2.updated == 1 && r2.revisions == 1)
+    assert(store.partitionColumns(cfg.tableName) == Seq("__year"))
+    // the next partitioned merge still resolves __year and adds a period
+    val withNew = revised.unionByName(canon.limit(1).select(
+      lit("2030-01-01").as("date"), lit(1234.0).cast(canon.schema(snake).dataType).as(snake)))
+    val r3 = runner.runDatasetPartitioned(cfg.tableName, withNew, Seq(snake),
+      gateHours = 0)
+    assert(r3.newRows == 1 && r3.updated == 0 && r3.revisions == 0)
+    val tableDir = new java.io.File(store.path(cfg.tableName))
+    assert(Seq(2015, 2030).forall(y => new java.io.File(tableDir, s"__year=$y").isDirectory))
+    assert(!tableDir.listFiles().exists(_.getName.endsWith(".parquet")))
+    val out = store.read(cfg.tableName)
+    assert(out.count() == 120)
+    def at(d: String) = out.filter(col("date") === d).collect().head.getAs[Double](snake)
+    assert(at("2015-07-01") == 7987.0 && at("2030-01-01") == 1234.0)
+  }
+
+  test("every entry point gives the same merge; a no-change run writes nothing") {
+    import graft.streaming.StreamIngest
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    val ts = Timestamp.valueOf("2025-06-01 00:00:00")
+    val base = Seq("2024-03-01" -> 1.0, "2024-06-01" -> 2.0, "2025-01-01" -> 3.0)
+    val revised = base.map { case (d, v) => d -> (if (d == "2024-06-01") 20.0 else v) }
+    // first load, identical re-run, one revised value, one new period
+    val steps = Seq(base, base, revised, revised :+ ("2025-02-01" -> 4.0))
+    val table = "sales"
+    def frame(rows: Seq[(String, Double)]): DataFrame = rows.toDF("date", table)
+    // each entry point: open against a store, then one call per step
+    // (Some(counts) from the batch DatasetResult, None for a stream)
+    type Step = Seq[(String, Double)] => Option[(Long, Long, Long)]
+    def batch(f: (Runner, DataFrame) => Runner.DatasetResult)(store: TableStore): (Step, () => Unit) = {
+      val runner = new Runner(spark, store, () => ts)
+      (rows => { val r = f(runner, frame(rows)); Some((r.newRows, r.updated, r.revisions)) }, () => ())
+    }
+    def stream(ingest: (DataFrame, TableStore, String) => org.apache.spark.sql.streaming.StreamingQuery)(
+        store: TableStore): (Step, () => Unit) = {
+      implicit val sq = spark.sqlContext
+      val mem = MemoryStream[StreamIngest.Obs]
+      val q = ingest(mem.toDF(), store, s"${store.path("_ckpt")}")
+      (rows => {
+        mem.addData(rows.map { case (d, v) => StreamIngest.Obs(d, v) })
+        q.processAllAvailable()
+        None
+      }, () => q.stop())
+    }
+    val entries = Seq[(String, Boolean, TableStore => (Step, () => Unit))](
+      ("runDataset", false, batch((r, df) => r.runDataset(table, df, Seq(table), gateHours = 0))),
+      ("runAllParallel", false, batch((r, df) =>
+        r.runAllParallel(Seq((table, df, Seq(table))), gateHours = 0).head)),
+      ("runDatasetPartitioned", true, batch((r, df) =>
+        r.runDatasetPartitioned(table, df, Seq(table), gateHours = 0))),
+      ("ingest", false, stream((df, st, ck) => StreamIngest.ingest(df, st, table, table, ck,
+        () => ts, trigger = Trigger.ProcessingTime(0)))),
+      ("ingestPartitioned", true, stream((df, st, ck) => StreamIngest.ingestPartitioned(df, st,
+        table, table, ck, () => ts, trigger = Trigger.ProcessingTime(0)))))
+    def revRows(store: TableStore) =
+      if (!store.exists(Registry.RevisionsTable)) Set.empty[Seq[Any]]
+      else store.read(Registry.RevisionsTable).collect().map(_.toSeq).toSet
+    def dataFiles(store: TableStore) = {
+      val root = new java.io.File(store.path(table))
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(root).filterNot(_.getName.startsWith("."))
+        .map(f => (root.toPath.relativize(f.toPath).toString, f.lastModified, f.length)).toSet
+    }
+    val outcomes = entries.map { case (name, partitioned, open) =>
+      val store = newEnv()._1
+      val (step, close) = open(store)
+      try {
+        var files = Set.empty[(String, Long, Long)]
+        val counts = steps.zipWithIndex.map { case (rows, i) =>
+          val (n0, r0) = (if (store.exists(table)) store.read(table).count() else 0L, revRows(store))
+          val reported = step(rows)
+          val added = revRows(store) -- r0
+          // counts read off the store, for streams and batch alike
+          val seen = (store.read(table).count() - n0,
+            added.map(_(1)).size.toLong, added.size.toLong)
+          reported.foreach(r => assert(r == seen, s"$name step $i reported $r, store shows $seen"))
+          if (i == 0) files = dataFiles(store)
+          if (i == 1) assert(dataFiles(store) == files, s"$name rewrote an unchanged table")
+          seen
+        }
+        assert(store.partitionColumns(table) == (if (partitioned) Seq("__year") else Nil), name)
+        val values = store.read(table).orderBy("date").collect()
+          .map(r => (r.getAs[String]("date"), r.getAs[Double](table))).toSeq
+        (name, counts, values, revRows(store))
+      } finally close()
+    }
+    val (_, counts0, values0, revs0) = outcomes.head
+    assert(counts0 == Seq((3L, 0L, 0L), (0L, 0L, 0L), (0L, 1L, 1L), (1L, 0L, 0L)))
+    assert(values0 == (revised :+ ("2025-02-01" -> 4.0)))
+    assert(revs0.map(r => (r(1), r(3), r(4))) == Set(("2024-06-01", 2.0, 20.0)))
+    outcomes.tail.foreach { case (name, counts, values, revs) =>
+      assert((counts, values, revs) == ((counts0, values0, revs0)), name)
+    }
+  }
+
   test("declared DECIMAL(p,s) at rest, double on the engine surface") {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val (store, runner, setNow) = newEnv()
